@@ -198,14 +198,19 @@ def connected_components(edges: DataFrame,
     # changed == min(all) < min(self row) — labels only ever decrease.
     # sym2 (edges + reversed edges + self-loops) is iteration-invariant
     # and checkpointed once; the initial labels read its self-loop rows
-    # back narrowly (no extra job).
+    # back narrowly (no extra job). The caller's own self-loop edges are
+    # dropped from the edge legs (the synthesized leg covers them), so
+    # each node has exactly one initial label row; the node universe
+    # still comes from the unfiltered edges, so a node seen only in a
+    # self-loop labels itself.
     edges = edges.select("src", "dst").localCheckpoint()
-    rev = edges.select(F.col("dst").alias("src"),
-                       F.col("src").alias("dst"))
+    proper = edges.where(F.col("src") != F.col("dst"))
+    rev = proper.select(F.col("dst").alias("src"),
+                        F.col("src").alias("dst"))
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
              .distinct())
-    sym2 = (edges.union(rev)
+    sym2 = (proper.union(rev)
             .union(nodes.select(F.col("node").alias("src"),
                                 F.col("node").alias("dst")))
             .localCheckpoint())

@@ -1,9 +1,10 @@
 """Distributed JSON-LD -> quads parse stage.
 
-One ``mapInPandas`` UDTF applies the pure-Python kernel
-(:mod:`..functions.parser`) to each extracted block: 1 block row in ->
-n quad rows out (the reference's whole Transform-stream pipeline,
-``/root/reference/lib/JsonLdParser.ts``, collapsed into a per-row kernel).
+One ``mapInArrow`` stage (:func:`extract_and_parse`) applies the
+pure-Python kernel (:mod:`..functions.parser`) to each extracted block:
+1 block row in -> n quad rows out (the reference's whole
+Transform-stream pipeline, its ``lib/JsonLdParser.ts``, collapsed into a
+per-row kernel).
 
 Scale design:
 - **No shuffle**: extract -> parse is a narrow chain; Catalyst fuses it into
@@ -138,7 +139,7 @@ def errors_only(parsed: DataFrame) -> DataFrame:
 def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
                       rdf_direction: str | None = None,
                       dedup_blocks: bool = False) -> DataFrame:
-    """Fused extract+parse: ONE ``mapInPandas`` stage over pages.
+    """Fused extract+parse: ONE ``mapInArrow`` stage over pages.
 
     Halves the JVM<->Python Arrow crossings vs extract_blocks ->
     parse_blocks (pages cross once; quads come back once; the intermediate

@@ -7,7 +7,8 @@ failure never re-emits quads for completed buckets and never misses a url.
 
 Layout under ``out_dir``:
 - ``quads/``    parquet partitioned by ``bucket`` (dynamic partition
-                overwrite: re-running a bucket replaces exactly that bucket)
+                overwrite: re-running a bucket replaces exactly that bucket),
+                one file per bucket per commit (:func:`store_layout`)
 - ``lineage/``  one row per completed bucket: counts + an order-insensitive
                 checksum (sum of xxhash64 over the quad tuple), written
                 only AFTER the bucket's quads land — the commit record.
@@ -16,6 +17,13 @@ At 10^12 documents: B is sized so a bucket is a few GB (e.g. B = 2^17);
 lineage stays tiny (B rows), and a resume is an anti-join of the pages scan
 against B completed bucket ids — a broadcast anti-join, no shuffle of the
 pages table.
+
+The store write clusters rows by bucket before the writer (one shuffle per
+commit). Without it every parse task writes its own file into every bucket
+it touches, so a commit makes tasks x buckets files; on a local filesystem
+without libhadoop, Hadoop also forks one ``chmod`` per file, checksum
+sidecar and bucket directory it creates, and those forks cost more CPU than
+the shuffle.
 """
 
 from __future__ import annotations
@@ -87,6 +95,11 @@ def parquet_quad_sink(sorted_quads: DataFrame, out_dir: str) -> None:
     spark-iceberg runtime jar is absent and cannot be vendored offline
     (PERMANENT constraint, documented in README/PARITY.md).
 
+    Both writers hand it :func:`store_layout` output, so each bucket it
+    touches gets exactly one file, not one per parse task (each file
+    costs a checksum sidecar and, on a local filesystem without
+    libhadoop, a forked ``chmod``).
+
     Codec: zstd (default level 3) — measured 7.5x vs uncompressed on the
     (pred, subj)-clustered quads layout where snappy gets 4.6x, with
     equal-or-faster scans (tools/compression_sweep.py; BENCH.md). At
@@ -133,9 +146,36 @@ def write_bucketed_table(df: DataFrame, table: str, buckets: int = 64,
      .saveAsTable(table))
 
 
+def store_layout(quads: DataFrame) -> DataFrame:
+    """The quad store's write layout, shared by every writer of ``quads/``.
+
+    ``repartition("bucket")`` puts each bucket in exactly one task, so a
+    commit writes one file per bucket it touches, whatever the upstream
+    parallelism (see the module docstring for why file count matters).
+    No partition count is fixed: AQE coalesces the exchange to the data
+    size and never splits a bucket across tasks.
+
+    ``sortWithinPartitions`` then clusters quads by (pred, subj) inside
+    each file, so parquet dictionary/RLE encoding collapses the
+    boilerplate-heavy pred column and pred-filtered scans skip row groups
+    via column stats. NB: "bucket" must lead the sort — the
+    dynamic-partition writer needs Sort(bucket) and the optimizer
+    ELIMINATES any other sortWithinPartitions beneath it (verified on
+    PySpark 4.1.2)."""
+    return (quads.repartition("bucket")
+            .sortWithinPartitions("bucket", "pred", "subj"))
+
+
 def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
                    snapshot_id: str = "", quad_sink=None) -> None:
     """Write quads (+error rows) partitioned by bucket, then commit lineage.
+
+    The sink receives :func:`store_layout` output: one file per bucket
+    per commit, where writing the parse tasks' rows directly would make
+    tasks x buckets files (and, on a local filesystem without libhadoop,
+    one forked ``chmod`` per file or directory). The persist sits ahead
+    of the layout's shuffle, so lineage aggregates the parse output
+    itself and the parse runs once.
 
     Ordering is the crash-safety contract: quads land first (dynamic
     partition overwrite -> idempotent per bucket), lineage appends last.
@@ -149,15 +189,7 @@ def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
     """
     cached = parsed_with_bucket.persist()
     try:
-        # sortWithinPartitions (no shuffle): quads cluster by (pred, subj)
-        # inside each file, so parquet dictionary/RLE encoding collapses the
-        # boilerplate-heavy pred column — a large compression win at corpus
-        # scale — and pred-filtered scans skip row groups via column stats
-        # NB: "bucket" must lead the sort — the dynamic-partition writer
-        # needs Sort(bucket) and the optimizer ELIMINATES any other
-        # sortWithinPartitions beneath it (verified on PySpark 4.1.2)
-        sorted_quads = cached.sortWithinPartitions("bucket", "pred", "subj")
-        (quad_sink or parquet_quad_sink)(sorted_quads, out_dir)
+        (quad_sink or parquet_quad_sink)(store_layout(cached), out_dir)
         (bucket_lineage(cached, snapshot_id).write.mode("append")
          .parquet(f"{out_dir}/lineage"))
     finally:
@@ -280,9 +312,7 @@ def upsert_wave(spark: SparkSession, out_dir: str,
         compacted = (old_lineage
                      .unionByName(bucket_lineage(merged, snapshot_id))
                      .localCheckpoint())
-        sorted_quads = merged.sortWithinPartitions("bucket", "pred",
-                                                   "subj")
-        (quad_sink or parquet_quad_sink)(sorted_quads, out_dir)
+        (quad_sink or parquet_quad_sink)(store_layout(merged), out_dir)
         compacted.write.mode("overwrite").parquet(f"{out_dir}/lineage")
     finally:
         wave_b.unpersist()

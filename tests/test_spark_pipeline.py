@@ -56,6 +56,15 @@ def test_error_channel_isolated(spark, pages):
                         & F.col("subj").isNotNull()).count() == 0
 
 
+def assert_one_file_per_bucket(out):
+    """The store layout: every quads/bucket=k/ directory holds exactly
+    one parquet file, whatever the parse parallelism."""
+    import glob
+    files = {d: glob.glob(f"{d}/*.parquet")
+             for d in glob.glob(f"{out}/quads/bucket=*")}
+    assert files and all(len(f) == 1 for f in files.values()), files
+
+
 def test_checkpoint_resume(spark, pages):
     out = tempfile.mkdtemp(prefix="kg_resume_")
     try:
@@ -84,6 +93,7 @@ def test_checkpoint_resume(spark, pages):
 
         # lineage audit: recomputed == recorded for every bucket
         assert lin.verify_lineage(spark, out).count() == 0
+        assert_one_file_per_bucket(out)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -97,8 +107,12 @@ def test_upsert_wave_rewrites_only_affected_buckets(spark, pages):
     try:
         buckets = 16
         parsed = extract_and_parse(pages, CONTEXTS)
+        # several parse tasks feed every bucket, so one file per bucket
+        # below is the layout's doing, not the input's
+        assert parsed.select(F.spark_partition_id()).distinct().count() > 1
         lin.write_bucketed(lin.with_bucket(parsed, buckets), out,
                            snapshot_id="snap-A")
+        assert_one_file_per_bucket(out)
 
         # wave: re-crawl of doc_id%31==0 pages with changed names
         from jsonld_streaming_parser_js_spark.sources.pages import (
@@ -121,6 +135,7 @@ def test_upsert_wave_rewrites_only_affected_buckets(spark, pages):
         lin.upsert_wave(spark, out, wave_parsed, buckets,
                         snapshot_id="snap-A")
         assert file_states(untouched) == before  # no rewrite outside wave
+        assert_one_file_per_bucket(out)
 
         got = set(map(tuple, (spark.read.parquet(f"{out}/quads")
                               .where(F.col("error").isNull())
@@ -508,6 +523,7 @@ def test_run_in_waves_equals_single_shot(spark, pages):
                         .select("subj", "pred", "obj", "graph").collect()))
         assert waved == clean
         assert lin.verify_lineage(spark, out).count() == 0
+        assert_one_file_per_bucket(out)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -840,7 +856,8 @@ def test_two_phase_cc_beats_hash_min_on_long_chains(spark):
 
 def test_two_phase_cc_matches_hash_min(spark):
     """Same labels from both CC algorithms on a multi-component graph
-    with chains, stars, a cycle, a self-loop and an isolated pair."""
+    with chains, stars, a cycle, a self-loop and an isolated pair; and
+    hash-min labels are unchanged by self-loop input edges."""
     e = [("b", "a"), ("c", "b"),                      # chain -> a
          ("h", "g"), ("i", "g"), ("j", "g"),          # star  -> g
          ("x", "y"), ("y", "z"), ("z", "x"),          # cycle -> x
@@ -853,6 +870,15 @@ def test_two_phase_cc_matches_hash_min(spark):
          for r in canon.connected_components_two_phase(edges).collect()}
     assert a == b
     assert ("q", "q") in a and ("z", "x") in a and ("n", "m") in a
+    # self-loop edges on nodes that have other edges change no label
+    free = [x for x in e if x[0] != x[1]]
+    looped = free + [("b", "b"), ("g", "g"), ("y", "y")]
+
+    def hash_min(rows):
+        df = spark.createDataFrame(rows, "src string, dst string")
+        return {(r["node"], r["component"])
+                for r in canon.connected_components(df).collect()}
+    assert hash_min(looped) == hash_min(free) == a - {("q", "q")}
 
 
 def test_fuzzy_cc_diameter_bound(spark, pages):

@@ -2,10 +2,11 @@
 
 At 100 TB the quads table's codec choice is a first-order storage/IO
 decision. This sweep writes the same sf-scale quads table under each
-codec (with the sink's production layout: sortWithinPartitions
-(pred, subj) so dictionary/RLE collapse the boilerplate-heavy pred
-column) and measures bytes, write wall, and full-scan wall. Prints one
-JSON line; BENCH.md records the findings.
+codec (with the sink's production layout, plans.lineage.store_layout:
+one file per url bucket, sorted by (pred, subj) so dictionary/RLE
+collapse the boilerplate-heavy pred column) and measures bytes, write
+wall, and full-scan wall. Prints one JSON line; BENCH.md records the
+findings.
 
 Usage: python tools/compression_sweep.py [sf_dir] [amplify]
 (amplify defaults to 50 so the table is big enough that codec cost,
@@ -40,7 +41,7 @@ def main() -> None:
     from jsonld_streaming_parser_js_spark.sources.session import get_spark
 
     from jsonld_streaming_parser_js_spark.plans.lineage import (
-        with_bucket)
+        store_layout, with_bucket)
 
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     amplify = int(sys.argv[2]) if len(sys.argv) > 2 else 50
@@ -48,16 +49,12 @@ def main() -> None:
     spark = get_spark(app="codec-sweep", cores=16)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # EXACT production layout (parquet_quad_sink): url-bucket partition
-    # dirs with (bucket, pred, subj) sortWithinPartitions — bucket
-    # partitioning splits files, which changes dictionary/RLE run
-    # lengths, so measuring an unpartitioned layout would misstate the
+    # the sink's own layout helper: how rows split into files changes
+    # dictionary/RLE run lengths, so any other layout would misstate the
     # ratios the sink actually achieves
-    quads = (with_bucket(
+    quads = store_layout(with_bucket(
         pages_to_quads(pages_from_documents(spark, sf, amplify=amplify),
-                       CONTEXTS), buckets)
-        .sortWithinPartitions("bucket", "pred", "subj")
-        .persist())
+                       CONTEXTS), buckets)).persist()
     n = quads.count()
 
     results = {}
